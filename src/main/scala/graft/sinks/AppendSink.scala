@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Typed append write with idempotent-replay semantics
   * (SURVEY.md §2 #4), re-expressing the reference's
@@ -14,12 +15,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition overwrite so only the partitions present in the incoming
   * batch are rewritten. At 100 TB this is a metadata swap of the
   * affected partitions — no read-modify-write of the whole table.
+  *
+  * Both writes rebalance the batch on its partition columns first:
+  * one extra shuffle of the incoming batch lets AQE coalesce it into
+  * files of `spark.sql.adaptive.advisoryPartitionSizeInBytes` per
+  * partition value (splitting skewed values), so a small scheduled
+  * batch lands as one file instead of one per input partition.
+  * [[compactPartition]] / [[compactDay]] remain for files written
+  * before this rebalance, and for streaming days that accrete one
+  * batch partition per micro-batch.
   */
 object AppendSink {
 
   /** Blind append (the reference's WRITE_APPEND). */
   def append(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("append").partitionBy(partitionCols: _*).parquet(path)
+    write(df, "append", path, partitionCols)
 
   /** Idempotent append: re-running the same batch replaces exactly the
     * partitions it writes. */
@@ -28,12 +38,19 @@ object AppendSink {
     val spark = df.sparkSession
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+    try write(df, "overwrite", path, partitionCols)
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
+
+  /** The one table write: rebalance on the partition columns, so AQE
+    * sizes the files (see the object doc). */
+  private def write(df: DataFrame, mode: String, path: String,
+      partitionCols: Seq[String]): Unit =
+    df.hint("rebalance", partitionCols.map(col): _*)
+      .write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   /** Manifest-aware table read — the reader side of the
     * [[compactDay]] commit protocol. Day dirs with `_batch_id=*`
@@ -261,8 +278,7 @@ object AppendSink {
       // swap it in via dynamic partition overwrite
       val tmp = path + s".compact_tmp"
       spark.read.parquet(path)
-        .filter(org.apache.spark.sql.functions.col(partitionCol) ===
-          partitionValue)
+        .filter(col(partitionCol) === partitionValue)
         .coalesce(nFiles)
         .write.mode("overwrite").parquet(tmp)
       // tmp carries partitionCol as a data column (typed as the

@@ -110,22 +110,16 @@ object Worklist {
         regexp_extract(col("line"), "^<tr><td>([A-Z0-9]+)</td>", 1)
           .as("symbol"))
       .filter(col("symbol") =!= "")
+    // one window pass: pos is the member's rank in document order and
+    // shard comes from the running count of included members up to it
     val wPos = Window.partitionBy(lit(0)).orderBy(col("line_no"))
-    val ledger = parsed
-      .withColumn("pos", row_number().over(wPos).cast("long"))
-      .withColumn("key", expr("cast(substring(symbol, 2) as bigint)"))
-      .withColumn("status",
-        when(col("symbol").isin(ExcludedSymbols: _*), "excluded")
-          .otherwise("included"))
-    val wShard = Window.partitionBy(lit(0)).orderBy(col("pos"))
-    val shards = ledger.filter(col("status") === "included")
-      .withColumn("shard",
-        least(floor((row_number().over(wShard).cast("long") - 1L) /
-          lit(ShardSize)), lit(MaxShard)).cast("long"))
-      .select(col("pos"), col("shard"))
-    ledger.join(shards, Seq("pos"), "left")
-      .select(col("pos"), col("symbol"), col("key"), col("status"),
-        col("shard"))
+    val included = !col("symbol").isin(ExcludedSymbols: _*)
+    parsed
+      .select(row_number().over(wPos).cast("long").as("pos"), col("symbol"),
+        expr("cast(substring(symbol, 2) as bigint)").as("key"),
+        when(included, "included").otherwise("excluded").as("status"),
+        when(included, least(floor((sum(when(included, 1L)).over(wPos) - 1L) /
+          lit(ShardSize)), lit(MaxShard)).cast("long")).as("shard"))
       .orderBy("pos")
   }
 

@@ -92,7 +92,12 @@ class AcquireSpec extends SparkTestBase {
     // header + footer markup present; member lines are <tr><td> rows
     assert(doc.exists(_.getString(1).startsWith("<table")))
     assert(doc.exists(_.getString(1) == "</table>"))
-    val ledger = Worklist.worklistBootstrap(spark, SfDir).collect()
+    val ledgerDf = Worklist.worklistBootstrap(spark, SfDir)
+    // one window pass over one scan of events: no self-join back to a
+    // second ranking of the included members
+    assert("""\(\d+\) Scan parquet""".r.findAllIn(planOf(ledgerDf)).size === 1,
+      planOf(ledgerDf))
+    val ledger = ledgerDf.collect()
     val members = graft.sources.Tables.load(spark, SfDir, "events")
       .select(col("user_id")).distinct().count()
     // every member parsed, markup rejected

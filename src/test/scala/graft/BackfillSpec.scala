@@ -107,4 +107,46 @@ class BackfillSpec extends SparkTestBase {
       .orderBy("batch_date")
     assert(got.collect().toSeq === want.collect().toSeq)
   }
+
+  test("alert feed resumes its backfill from the scratch log after an append") {
+    import java.io.File
+    import org.apache.commons.io.FileUtils
+    // a private corpus copy whose events table is a directory, so a
+    // batch can be appended to it
+    val dir =
+      java.nio.file.Files.createTempDirectory("graft_alertcopy").toString
+    FileUtils.copyDirectory(new File(SfDir), new File(dir))
+    val events = new File(dir, "events.parquet")
+    FileUtils.moveFile(events, new File(dir, "part-0.parquet"))
+    FileUtils.moveFileToDirectory(new File(dir, "part-0.parquet"), events, true)
+    val log = new File(sys.props("java.io.tmpdir"),
+      s"graft_alertbf_${graft.sources.StagePath.key(dir)}/_graft_log")
+    def logState() = Option(log.listFiles()).getOrElse(Array.empty[File])
+      .map(f => f.getName -> f.lastModified).sorted.toSeq
+    def rows() = graft.pipeline.Alerts.alertFeed(spark, dir).collect().toSeq
+    try {
+      val first = rows()
+      val committed = logState()
+      assert(committed.size === 2, "days 1-2 commit before the outage")
+      // a clean batch of known members moves the events table's mtime
+      // and changes no alert input
+      val raw = spark.read.parquet(events.getPath)
+      val (n, maxId) = raw.agg(count(lit(1)), max("event_id"))
+        .as[(Long, Long)].head()
+      val batch = raw.filter(col("event_type") === "purchase" &&
+          col("value") >= 0d && col("user_id") >= 0 &&
+          col("event_id").isNotNull &&
+          col("ts") >= lit("2024-01-02 00:00:00") &&
+          col("ts") < lit("2024-12-31 00:00:00"))
+        .dropDuplicates("event_id").limit(5)
+        .withColumn("event_id", col("event_id") + maxId + 1)
+      graft.sinks.AppendSink.append(batch, events.getPath, Seq.empty)
+      assert(graft.sources.Tables.load(spark, dir, "events").count() === n + 5)
+      assert(rows() === first)
+      assert(logState() === committed, "no new version, none rewritten")
+    } finally {
+      FileUtils.deleteQuietly(new File(dir))
+      FileUtils.deleteQuietly(log.getParentFile)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sinks.AppendSink
@@ -78,6 +79,36 @@ class OperatorsSpec extends SparkTestBase {
     assert(AppendSink.readBack(spark, out).count() === 2)
     AppendSink.append(batch, out, Seq("d")) // blind append does duplicate
     assert(AppendSink.readBack(spark, out).count() === 4)
+  }
+
+  test("append lands right-sized files: one per batch, one per partition value") {
+    def parquetFiles(dir: String): Seq[java.io.File] =
+      org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir),
+        Array("parquet"), true).asScala.toSeq
+    val root = java.nio.file.Files.createTempDirectory("graft_sizing").toString
+    // a 20-partition batch, unpartitioned table: one file, not 20
+    val flat = s"$root/flat"
+    val batch = spark.range(0, 500, 1, 20)
+      .select(col("id"), (col("id") % 3).cast("string").as("d"))
+    AppendSink.append(batch, flat, Seq.empty)
+    assert(parquetFiles(flat).size === 1)
+    assert(spark.read.parquet(flat).as[(Long, String)].collect().sorted ===
+      batch.as[(Long, String)].collect().sorted)
+    // partitioned table: one file per partition value, rows intact
+    val parted = s"$root/parted"
+    AppendSink.append(batch, parted, Seq("d"))
+    val files = parquetFiles(parted)
+    assert(files.size === 3)
+    assert(files.map(_.getParentFile.getName).distinct.size === 3)
+    assert(AppendSink.readBack(spark, parted).count() === 500L)
+    // an idempotent replay still replaces rather than duplicates
+    AppendSink.idempotentAppend(batch, parted, Seq("d"))
+    AppendSink.idempotentAppend(batch, parted, Seq("d"))
+    assert(parquetFiles(parted).size === 3)
+    assert(AppendSink.readBack(spark, parted).select("id", "d")
+      .as[(Long, String)].collect().sorted ===
+      batch.as[(Long, String)].collect().sorted)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("shard union is row-preserving and covers the whole keyspace") {
